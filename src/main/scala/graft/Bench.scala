@@ -134,13 +134,8 @@ object Bench {
 
     def extractionRun(spark: SparkSession, pages: String, out: String, par: Int): Double = {
       val (_, t) = timeSec {
-        // exactMetrics=false: the bench measures parse THROUGHPUT; the
-        // exact-metrics read-back is a fixed per-commit job that would
-        // only add scale-independent noise to the small-corpus timings
-        // (production default stays exact).
         Extract.run(spark, pages, out,
           Extract.Config(mode = "construction", buckets = buckets, parallelism = par,
-            exactMetrics = false,
             // r3: the corpus now carries scanned docs; run the OCR seam so
             // the benched pipeline covers the recovered-text path too
             ocrEngine = "fake"))

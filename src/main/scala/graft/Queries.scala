@@ -5296,7 +5296,7 @@ object Queries {
             java.util.Arrays.copyOfRange(full, 0, full.length / 3)
         }
         val dec = graft.pipeline.Decode.decode(bytes, null)
-        val errKind = dec.error.map(_.takeWhile(_ != ':')).getOrElse("")
+        val errKind = dec.error.map(graft.pipeline.Decode.errorKind).getOrElse("")
         (id, framing, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
       }
       .toDF("doc_id", "framing", "n_pages", "err_kind", "got_text")
@@ -5620,7 +5620,7 @@ object Queries {
             encrypt = Some(Pdf.EncryptSpec(userPwd = s"pwd-$id")))
         }
         val dec = graft.pipeline.Decode.decode(bytes, null)
-        val errKind = dec.error.map(_.takeWhile(_ != ':')).getOrElse("")
+        val errKind = dec.error.map(graft.pipeline.Decode.errorKind).getOrElse("")
         (id, mode, dec.pages.length, errKind, dec.pages.map(_.text).mkString("\n\n"))
       }
       .toDF("doc_id", "mode", "n_pages", "err_kind", "got_text")

@@ -16,6 +16,19 @@ import java.nio.charset.StandardCharsets
   */
 object Decode {
 
+  /** Error kinds. Every `error` string is `<kind>` or `<kind>: <message>`;
+    * [[errorKind]] recovers the kind.
+    */
+  val PdfParse = "pdf-parse"
+  val PdfEncrypted = "pdf-encrypted"
+  val HtmlParse = "html-parse"
+  val NullPayload = "null payload"
+
+  def errorKind(error: String): String = error.takeWhile(_ != ':')
+
+  private def failure(kind: String, e: Exception): Option[String] =
+    Some(s"$kind: ${e.getMessage}")
+
   /** UTF-8 byte length without materializing the encoded array — bytesIn
     * is a metric; `text.length` counted UTF-16 units (chars), skewing
     * byte-volume metrics for non-ASCII payloads.
@@ -124,10 +137,10 @@ object Decode {
             // separate the two residuals (VERDICT r4 #8)
             case e: Pdf.EncryptedPdfException =>
               (Vector.empty[PageData], "pdf", Vector.empty[Span], html.length.toLong,
-                Some(s"pdf-encrypted: ${e.getMessage}"))
+                failure(PdfEncrypted, e))
             case e: Exception =>
               (Vector.empty[PageData], "pdf", Vector.empty[Span], html.length.toLong,
-                Some(s"pdf-parse: ${e.getMessage}"))
+                failure(PdfParse, e))
           }
         }
       } else if (html != null) {
@@ -143,7 +156,7 @@ object Decode {
         } catch {
           case e: Exception =>
             (Vector.empty[PageData], "html", Vector.empty[Span], html.length.toLong,
-              Some(s"html-parse: ${e.getMessage}"))
+              failure(HtmlParse, e))
         }
       } else if (text != null) {
         val ps = PyStr.split(text, '\f').toVector.zipWithIndex.map { case (t, i) =>
@@ -151,10 +164,11 @@ object Decode {
         }
         (ps, "text", Vector.empty[Span], utf8Len(text), None)
       } else {
-        (Vector.empty[PageData], "none", Vector.empty[Span], 0L, Some("null payload"))
+        (Vector.empty[PageData], "none", Vector.empty[Span], 0L, Some(NullPayload))
       }
 
     // page-level spans for non-html payloads: offsets into '\n\n'-combined text
+    // (the span contract for decoders with no finer block structure)
     val spans =
       if (spans0.nonEmpty || pages.isEmpty) spans0
       else {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.core.Assemble
 import graft.json.Canonical
+import graft.plans.ExtractPages
 import graft.table.{BucketMetrics, Manifest, SnapshotTable}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -28,11 +29,11 @@ final case class DocRow(
 
 /** The Dataset pipeline (SURVEY.md §3 Spark lifecycle):
   * pruned scan of one bucket partition → payload-valid filter → salted
-  * repartition by url-hash (host-skew defusal) → typed mapPartitions parse
-  * core (HTML/PDF/text routed by magic bytes) → snapshot data files →
-  * manifest commit. Bucket granularity gives resumability: each bucket is
-  * one chained snapshot commit; a killed job resumes at the first
-  * uncommitted bucket.
+  * repartition by url-hash (host-skew defusal) → the `ExtractPages` parse
+  * operator (HTML/PDF/text routed by magic bytes) → snapshot data files →
+  * manifest commit with metrics re-aggregated from those files. Bucket
+  * granularity gives resumability: each bucket is one chained snapshot
+  * commit; a killed job resumes at the first uncommitted bucket.
   */
 object Extract {
 
@@ -49,13 +50,6 @@ object Extract {
         * reference's no-credential path).
         */
       secondSource: String = "none",
-      /** Committed manifest metrics: true (default) re-aggregates the
-        * just-written bucket files — exact under task retries/speculation
-        * (accumulator updates inside transformations are at-least-once);
-        * the read-back scans only 3 numeric columns of one bucket. false
-        * trusts the accumulators (approximate, zero extra jobs).
-        */
-      exactMetrics: Boolean = true,
       /** OCR seam (S4/S5): "none" (offline default — no tesseract in the
         * sandbox, same as the reference with `_ocr_available=False`) or
         * "fake" (deterministic sidecar engine, makes the OCR path testable
@@ -75,22 +69,6 @@ object Extract {
     def ocr: Option[OcrEngine] = Ocr.engine(ocrEngine)
   }
 
-  /** Page-boundary spans into the '\n\n'-joined extracted text — the span
-    * contract for payloads whose decoder has no finer block structure
-    * (pdf/text); HTML payloads carry block-level spans from the
-    * boilerplate scorer instead.
-    */
-  private def pageSpans(pages: Seq[graft.core.PageData]): Vector[SpanRow] = {
-    var off = 0L
-    val out = Vector.newBuilder[SpanRow]
-    pages.foreach { p =>
-      val len = p.text.length.toLong
-      out += SpanRow(off, off + len, "page")
-      off += len + 2 // the "\n\n" joiner
-    }
-    out.result()
-  }
-
   /** Pure per-row parse — the single opaque (non-Catalyst) region. */
   def parseRow(url: String, html: Array[Byte], text: String, bucket: Int, mode: String,
                llm: Option[graft.core.LlmParser] = None,
@@ -108,9 +86,7 @@ object Extract {
       n_pages = dec.pages.length,
       extracted_text = Assemble.combinePagesText(dec.pages),
       extracted_json = json,
-      spans =
-        if (dec.spans.nonEmpty) dec.spans.map(s => SpanRow(s.start, s.end, s.kind))
-        else pageSpans(dec.pages),
+      spans = dec.spans.map(s => SpanRow(s.start, s.end, s.kind)),
       bytes_in = dec.bytesIn,
       chars_out = dec.charsOut,
       needs_ocr = dec.needsOcr,
@@ -131,30 +107,15 @@ object Extract {
   def saltedKey(salt: Int): org.apache.spark.sql.Column =
     xxhash64(concat(col("url"), lit("#" + salt)))
 
-  /** Per-bucket extraction metrics, filled by accumulators during the write
-    * action itself — no second read-back job per bucket (at 1000 executors
-    * that extra scan per commit is pure scheduling overhead).
+  /** Transform one bucket's pages into DocRows: O1 guard → salted
+    * repartition → the `ExtractPages` operator. Works on batch and
+    * streaming DataFrames alike; registers the operator's planner strategy
+    * on the session if it is not there yet.
     */
-  final case class Acc(docs: org.apache.spark.util.LongAccumulator,
-                       bytesIn: org.apache.spark.util.LongAccumulator,
-                       charsOut: org.apache.spark.util.LongAccumulator,
-                       errors: org.apache.spark.util.LongAccumulator,
-                       pdfFallback: org.apache.spark.util.LongAccumulator,
-                       pdfEncrypted: org.apache.spark.util.LongAccumulator)
-  def newAcc(spark: SparkSession): Acc = Acc(
-    spark.sparkContext.longAccumulator("docs"),
-    spark.sparkContext.longAccumulator("bytes_in"),
-    spark.sparkContext.longAccumulator("chars_out"),
-    spark.sparkContext.longAccumulator("errors"),
-    spark.sparkContext.longAccumulator("pdf_fallback"),
-    spark.sparkContext.longAccumulator("pdf_encrypted"))
-
-  /** Transform one bucket's pages into DocRows. Declarative pre/post ops;
-    * the parse core is a typed mapPartitions (Catalyst object op).
-    */
-  def extractBucket(spark: SparkSession, pages: DataFrame, cfg: Config, bucket: Int,
-                    acc: Option[Acc] = None): Dataset[DocRow] = {
+  def extractBucket(spark: SparkSession, pages: DataFrame, cfg: Config,
+                    bucket: Int): Dataset[DocRow] = {
     import spark.implicits._
+    ExtractPages.register(spark)
     val p = if (cfg.parallelism > 0) cfg.parallelism
             else spark.sessionState.conf.numShufflePartitions
     val valid = pages
@@ -162,25 +123,7 @@ object Extract {
       .select(col("url"), col("html"), col("text"))
     // salted repartition by url-hash: host-skew cannot gang up on a task.
     val salted = valid.repartition(p, saltedKey(cfg.salt))
-    val llm = cfg.llmParser
-    val ocr = cfg.ocr
-    val useOcr = cfg.useOcr
-    salted.as[(String, Array[Byte], String)].mapPartitions { it =>
-      it.map { case (url, html, text) =>
-        val row = parseRow(url, html, text, bucket, cfg.mode, llm, ocr, useOcr)
-        acc.foreach { a =>
-          a.docs.add(1L); a.bytesIn.add(row.bytes_in); a.charsOut.add(row.chars_out)
-          if (row.error != null) {
-            a.errors.add(1L)
-            if (row.payload_kind == "pdf") {
-              if (row.error.startsWith("pdf-encrypted")) a.pdfEncrypted.add(1L)
-              else a.pdfFallback.add(1L)
-            }
-          }
-        }
-        row
-      }
-    }
+    ExtractPages.extract(salted, cfg, bucket).as[DocRow]
   }
 
   final case class RunResult(manifestVersion: Int, snapshotId: String,
@@ -211,34 +154,25 @@ object Extract {
         val t0 = System.nanoTime()
         // partition-pruned scan: only this bucket's files are read
         val pages = spark.read.parquet(pagesRoot).where(col("bucket") === b)
-        val acc = newAcc(spark)
-        val out = extractBucket(spark, pages, cfg, b, Some(acc))
+        val out = extractBucket(spark, pages, cfg, b)
         val dir = table.dataDir(snapshotId, b)
         out.write.mode("overwrite").parquet(dir.toString)
         val secs = (System.nanoTime() - t0) / 1e9
-        // Exact metrics (default): aggregate the committed files themselves —
-        // task retries / speculative execution make in-transformation
-        // accumulator updates at-least-once, so persisted manifests would
-        // overcount. The read-back prunes to 3 numeric columns of this one
-        // bucket (column-pruned vectorized scan, one tiny job per commit).
-        val bm =
-          if (cfg.exactMetrics) {
-            val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
-            val m = spark.read.parquet(dir.toString).agg(
-              count(lit(1)), coalesce(sum(col("bytes_in")), lit(0L)),
-              coalesce(sum(col("chars_out")), lit(0L)),
-              coalesce(sum(when(col("error").isNotNull, 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(col("needs_ocr"), 1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(isPdfErr && !col("error").startsWith("pdf-encrypted"),
-                1L).otherwise(0L)), lit(0L)),
-              coalesce(sum(when(isPdfErr && col("error").startsWith("pdf-encrypted"),
-                1L).otherwise(0L)), lit(0L))).head()
-            BucketMetrics(b, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
-              secs, m.getLong(4), m.getLong(5), m.getLong(6))
-          } else
-            BucketMetrics(b, acc.docs.value, acc.bytesIn.value,
-              acc.charsOut.value, acc.errors.value, secs, 0L,
-              acc.pdfFallback.value, acc.pdfEncrypted.value)
+        // Metrics aggregate the committed files themselves — exact under
+        // task retries and speculative execution, which would make counters
+        // updated inside the parse at-least-once. The read-back prunes to
+        // the metric columns of this one bucket (one small job per commit).
+        val isPdfErr = col("error").isNotNull && col("payload_kind") === "pdf"
+        val isEncrypted = col("error").startsWith(Decode.PdfEncrypted)
+        def countIf(c: org.apache.spark.sql.Column) =
+          coalesce(sum(when(c, 1L).otherwise(0L)), lit(0L))
+        val m = spark.read.parquet(dir.toString).agg(
+          count(lit(1)), coalesce(sum(col("bytes_in")), lit(0L)),
+          coalesce(sum(col("chars_out")), lit(0L)), countIf(col("error").isNotNull),
+          countIf(col("needs_ocr")), countIf(isPdfErr && !isEncrypted),
+          countIf(isPdfErr && isEncrypted)).head()
+        val bm = BucketMetrics(b, m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3),
+          secs, m.getLong(4), m.getLong(5), m.getLong(6))
         version += 1
         metrics = metrics :+ bm
         dataDirs = dataDirs :+ s"data/snap-$snapshotId/bucket=$b"

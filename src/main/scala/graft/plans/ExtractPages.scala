@@ -1,32 +1,31 @@
 package graft.plans
 
-import graft.pipeline.Extract
+import graft.pipeline.{DocRow, Extract}
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, UnsafeProjection}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** The extraction operator as a first-class Catalyst citizen (SURVEY §7.4's
-  * remaining stretch): a custom `LogicalPlan` node + `SparkStrategy` +
-  * physical `SparkPlan`, registered through `SparkSessionExtensions`
-  * (pattern: public SparkSessionExtensions examples, SNIPPETS.md [1]).
+/** The extraction operator as a first-class Catalyst citizen: a custom
+  * `LogicalPlan` node + `SparkStrategy` + physical `SparkPlan`, registered
+  * through `SparkSessionExtensions` (pattern: public SparkSessionExtensions
+  * examples, SNIPPETS.md [1]). It is the only physical parse operator —
+  * the batch pipeline ([[Extract.extractBucket]]), streaming ingest and
+  * [[ExtractPages.extract]] all plan through it.
   *
-  * `ExtractPages(child, mode)` consumes a child relation carrying
+  * `ExtractPages(child, cfg, bucket)` consumes a child relation carrying
   * (url STRING, html BINARY, text STRING) — the BASELINE.json input_hint
-  * payload columns — and produces one extraction row per url via the same
-  * parse core as the Dataset pipeline. Because the node declares exactly
-  * those three references, Catalyst column-prunes the child scan down to
-  * them regardless of how wide the pages table is, and pushes any child
-  * filters below the node — optimizations the closed `mapPartitions`
-  * formulation gets only from the typed pipeline's explicit select.
+  * payload columns — and produces one [[DocRow]] per url. Because the node
+  * declares exactly those three references, Catalyst column-prunes the
+  * child scan down to them when a projection sits above the node, and
+  * pushes child filters below it.
   */
 case class ExtractPages(
-    child: LogicalPlan, mode: String,
+    child: LogicalPlan, cfg: Extract.Config, bucket: Int,
     // output lives in the constructor so plan copies (withNewChildInternal
     // during optimizer rewrites) keep STABLE expression ids — regenerating
     // attributes per instance breaks parent references at binding time
@@ -41,28 +40,25 @@ case class ExtractPages(
 object ExtractPages {
   private[plans] val inputCols = Set("url", "html", "text")
 
-  def freshOutput(): Seq[Attribute] = outputSchema.map(f =>
+  /** Output schema and row serialization both come from the [[DocRow]]
+    * encoder, so the node's rows are exactly what a `Dataset[DocRow]`
+    * would write.
+    */
+  private[plans] val encoder: ExpressionEncoder[DocRow] = ExpressionEncoder[DocRow]()
+
+  def freshOutput(): Seq[Attribute] = encoder.schema.map(f =>
     AttributeReference(f.name, f.dataType, f.nullable)())
 
-  val outputSchema: StructType = StructType(Seq(
-    StructField("url", StringType, nullable = false),
-    StructField("payload_kind", StringType, nullable = false),
-    StructField("n_pages", IntegerType, nullable = false),
-    StructField("extracted_text", StringType, nullable = false),
-    StructField("extracted_json", StringType, nullable = true),
-    StructField("bytes_in", LongType, nullable = false),
-    StructField("chars_out", LongType, nullable = false),
-    StructField("needs_ocr", BooleanType, nullable = false),
-    StructField("error", StringType, nullable = true)))
-
-  /** Column-API entry: wrap a pages DataFrame in the logical node. The
-    * session must have the strategy registered ([[GraftExtensions]] via
-    * spark.sql.extensions, or [[register]] on a live session).
+  /** Column-API entry: wrap a pages DataFrame in the logical node (no
+    * repartition). The session must have the strategy registered
+    * ([[GraftExtensions]] via spark.sql.extensions, or [[register]] on a
+    * live session).
     */
-  def extract(pages: DataFrame, mode: String = "construction"): DataFrame =
-    GraftBridge.ofRows(pages.sparkSession, ExtractPages(pages.queryExecution.logical, mode))
+  def extract(pages: DataFrame, cfg: Extract.Config = Extract.Config(),
+              bucket: Int = 0): DataFrame =
+    GraftBridge.ofRows(pages.sparkSession, ExtractPages(pages.queryExecution.logical, cfg, bucket))
 
-  /** Register the planner strategy on a live session (tests / REPL). */
+  /** Register the planner strategy on a live session; idempotent. */
   def register(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(ExtractPagesStrategy))
       spark.experimental.extraStrategies =
@@ -72,8 +68,8 @@ object ExtractPages {
 /** Plans the logical node to the physical exec. */
 object ExtractPagesStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case ExtractPages(child, mode, out) =>
-      graft.plans.ExtractPagesExec(planLater(child), mode, out) :: Nil
+    case ExtractPages(child, cfg, bucket, out) =>
+      ExtractPagesExec(planLater(child), cfg, bucket, out) :: Nil
     case _ => Nil
   }
 }
@@ -81,8 +77,10 @@ object ExtractPagesStrategy extends SparkStrategy {
 /** Physical operator: one narrow pass over the child's partitions through
   * the parse core — no shuffle introduced (partitioning/skew policy stays
   * with the surrounding plan, e.g. the pipeline's salted repartition).
+  * The LLM and OCR engines are resolved here, on the driver, and shipped
+  * with the task closure.
   */
-case class ExtractPagesExec(child: SparkPlan, mode: String,
+case class ExtractPagesExec(child: SparkPlan, cfg: Extract.Config, bucket: Int,
                             override val output: Seq[Attribute]) extends UnaryExecNode {
 
   override protected def doExecute(): RDD[InternalRow] = {
@@ -91,27 +89,16 @@ case class ExtractPagesExec(child: SparkPlan, mode: String,
     val (ui, hi, ti) = (idx("url"), idx("html"), idx("text"))
     require(ui >= 0 && hi >= 0 && ti >= 0,
       s"ExtractPages child must provide url/html/text, got ${childOut.map(_.name)}")
-    val m = mode
-    val out = output
-    child.execute().mapPartitions({ it =>
-      val proj = UnsafeProjection.create(out.map(_.dataType).toArray)
+    val (b, mode, llm, ocr, useOcr) = (bucket, cfg.mode, cfg.llmParser, cfg.ocr, cfg.useOcr)
+    child.execute().mapPartitions { it =>
+      val toRow = ExtractPages.encoder.createSerializer()
       it.map { row =>
         val url = row.getUTF8String(ui).toString
         val html = if (row.isNullAt(hi)) null else row.getBinary(hi)
         val text = if (row.isNullAt(ti)) null else row.getUTF8String(ti).toString
-        val r = Extract.parseRow(url, html, text, 0, m)
-        proj(InternalRow(
-          UTF8String.fromString(r.url),
-          UTF8String.fromString(r.payload_kind),
-          r.n_pages,
-          UTF8String.fromString(r.extracted_text),
-          if (r.extracted_json == null) null else UTF8String.fromString(r.extracted_json),
-          r.bytes_in,
-          r.chars_out,
-          r.needs_ocr,
-          if (r.error == null) null else UTF8String.fromString(r.error)))
+        toRow(Extract.parseRow(url, html, text, b, mode, llm, ocr, useOcr))
       }
-    }, preservesPartitioning = true)
+    }
   }
 
   override protected def withNewChildInternal(newChild: SparkPlan): ExtractPagesExec =

@@ -7,19 +7,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-/** Incremental ingest: the batch pipeline's parse core behind Structured
-  * Streaming, for the deployment where new Common-Crawl-style page files
-  * land continuously. The reference is a one-shot CLI (SURVEY §2.8 — no
+/** Incremental ingest: the batch pipeline behind Structured Streaming, for
+  * the deployment where new Common-Crawl-style page files land
+  * continuously. The reference is a one-shot CLI (SURVEY §2.8 — no
   * streaming exists to port); this module is the Spark-native extension
-  * point: `readStream` file source → the SAME single-opaque-region parse →
-  * append sink, with exactly-once per-file semantics from the streaming
-  * checkpoint (complementing the batch snapshot/resume layer, which covers
+  * point: `readStream` file source → the batch path's own
+  * [[Extract.extractBucket]] (O1 guard, salted repartition, the
+  * `ExtractPages` operator; all rows in bucket 0) → append sink, with
+  * exactly-once per-file semantics from the streaming checkpoint
+  * (complementing the batch snapshot/resume layer, which covers
   * reprocessing).
   *
-  * Scale shape: the file source hands whole files to tasks (no shuffle
-  * before the parse); `maxFilesPerTrigger` bounds a micro-batch, and the
-  * same salted repartition as the batch path defuses host skew inside a
-  * batch when one host's crawl dominates a drop.
+  * Scale shape: `maxFilesPerTrigger` bounds a micro-batch, and the salted
+  * repartition defuses host skew inside a batch when one host's crawl
+  * dominates a drop.
   */
 object StreamingExtract {
 
@@ -33,29 +34,6 @@ object StreamingExtract {
     StructField("text", StringType, nullable = true),
     StructField("lang", StringType, nullable = true)))
 
-  /** Transform shared by batch and streaming: O1 guard → salted
-    * repartition → typed parse core. Works on any (streaming or batch)
-    * DataFrame with the payload columns.
-    */
-  def extractTransform(spark: SparkSession, pages: DataFrame,
-                       cfg: Extract.Config): Dataset[graft.pipeline.DocRow] = {
-    import spark.implicits._
-    val p = if (cfg.parallelism > 0) cfg.parallelism
-            else spark.sessionState.conf.numShufflePartitions
-    val llm = cfg.llmParser
-    val ocr = cfg.ocr
-    val useOcr = cfg.useOcr
-    val mode = cfg.mode
-    pages
-      .where(col("html").isNotNull || col("text").isNotNull)
-      .select(col("url"), col("html"), col("text"))
-      .repartition(p, xxhash64(concat(col("url"), lit("#" + cfg.salt))))
-      .as[(String, Array[Byte], String)]
-      .mapPartitions(_.map { case (url, html, text) =>
-        Extract.parseRow(url, html, text, bucket = 0, mode, llm, ocr, useOcr)
-      })
-  }
-
   /** Stream new page files into an append-only extraction directory.
     * Exactly-once per input file via the streaming checkpoint; restart
     * with the same checkpointLocation resumes where it stopped.
@@ -68,7 +46,7 @@ object StreamingExtract {
       .schema(pagesSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(pagesRoot)
-    extractTransform(spark, pages, cfg).writeStream
+    Extract.extractBucket(spark, pages, cfg, bucket = 0).writeStream
       .format("parquet")
       .option("path", s"$outRoot/data")
       .option("checkpointLocation", s"$outRoot/_checkpoint")

@@ -33,8 +33,7 @@ object ClusterBench {
 
   private def extraction(spark: SparkSession, pages: String, out: String, par: Int): Long = {
     val res = Extract.run(spark, pages, out,
-      Extract.Config(mode = "construction", buckets = 1, parallelism = par,
-        exactMetrics = false, ocrEngine = "fake"))
+      Extract.Config(mode = "construction", buckets = 1, parallelism = par, ocrEngine = "fake"))
     res.metrics.map(_.docs).sum
   }
 

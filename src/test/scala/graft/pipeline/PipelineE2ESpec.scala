@@ -128,4 +128,43 @@ class PipelineE2ESpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows(d.url) == golden(d.url))
     }
   }
+
+  test("manifest error and OCR counts equal a recount over the committed snapshot") {
+    import org.apache.spark.sql.functions._
+    import graft.pdf.Pdf
+    val sp = spark; import sp.implicits._
+    val page = Seq(Pdf.PageSpec(Seq((72.0, 720.0, "quantity 12 fixtures, model AB-100"))))
+    val rows = Seq[(String, Array[Byte], String)](
+      ("https://m.example/encrypted.pdf",
+        Pdf.writePages(page, flate = false, encrypt = Some(Pdf.EncryptSpec(userPwd = "pwd-1"))),
+        null),
+      ("https://m.example/broken.pdf",
+        "%PDF-1.4\nnot a pdf body".getBytes(StandardCharsets.ISO_8859_1), null),
+      ("https://m.example/page.html",
+        "<html><body><p>Install 4 wall-mount fixtures per floor in every stairwell.</p></body></html>"
+          .getBytes(StandardCharsets.UTF_8), null),
+      // a scanned page: only a short visible caption, no OCR engine
+      ("https://m.example/scan.pdf",
+        Pdf.write(Seq(Seq((72.0, 720.0, "SCAN p.1"))), flate = false), null))
+    val pagesPath = s"$work/pages_metrics"
+    rows.toDF("url", "html", "text").withColumn("bucket", lit(0))
+      .write.mode("overwrite").partitionBy("bucket").parquet(pagesPath)
+    val outRoot = s"$work/metrics"
+    Extract.run(spark, pagesPath, outRoot, Extract.Config(buckets = 1, parallelism = 2))
+
+    val got = new graft.table.SnapshotTable(outRoot).currentManifest.get.metrics
+    assert(got.map(_.bucket) == Vector(0))
+    val snap = Extract.readSnapshot(spark, outRoot)
+      .select("payload_kind", "error", "needs_ocr").as[(String, String, Boolean)].collect()
+    def pdfErrors(encrypted: Boolean) = snap.count { case (k, e, _) =>
+      k == "pdf" && e != null && (Decode.errorKind(e) == Decode.PdfEncrypted) == encrypted
+    }.toLong
+    val recount = (snap.count(_._2 != null).toLong, snap.count(_._3).toLong,
+      pdfErrors(encrypted = false), pdfErrors(encrypted = true))
+    val bm = got.head
+    assert(bm.docs == rows.length)
+    assert((bm.errors, bm.needsOcr, bm.pdfFallback, bm.pdfEncrypted) == recount)
+    // each planted row lands in its count once (errors, needs_ocr, fallback, encrypted)
+    assert(recount == ((2L, 1L, 1L, 1L)), s"manifest $bm")
+  }
 }
